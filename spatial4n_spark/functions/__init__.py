@@ -505,11 +505,15 @@ def _dbl_lit(v: float) -> str:
 def _spread_bits32_sql(v: str) -> str:
     """SQL-string twin of _spread_bits32 — same five mask steps.
 
-    Textual duplication of the input mirrors the Column version's
-    effective tree (Column reuse shares objects but codegen walks the
-    tree the same number of times), so the generated code is identical;
-    only the DRIVER-side construction cost differs: one string format +
-    one F.expr parse instead of ~60 py4j roundtrips per cell code.
+    Each step writes its input twice, so the result holds 2^5 copies
+    of `v`. Textual duplication mirrors the Column version's effective
+    tree (Column reuse shares objects but codegen walks the tree the
+    same number of times), so the generated code is identical. Keep
+    `v` a plain column reference: with a whole axis-index expression
+    as `v` (the `st_cell_code_col` form) the SQL is ~31 KB at
+    precision 6, its first parse in a fresh JVM took 9.5 s and each
+    warm parse 0.3-0.6 s (4-vCPU VM). DataFrame callers use
+    `with_cell_code`.
     """
     for shift, mask in ((16, 0x0000FFFF0000FFFF), (8, 0x00FF00FF00FF00FF),
                         (4, 0x0F0F0F0F0F0F0F0F), (2, 0x3333333333333333),
@@ -562,9 +566,12 @@ def st_axis_idx_col(coord, axis: str, precision: int):
     code blows the 64 KB Janino method limit (VERDICT r02 item 2).
 
     `coord` may be a Column or a SQL fragment string; the string form
-    builds the whole expression with ONE F.expr parse (the Column form
-    costs hundreds of py4j roundtrips per call — measured ~0.5 s of
-    driver time per cell-code call site, pure plan-construction).
+    builds the expression with one F.expr parse instead of a py4j
+    roundtrip per node. Projected on its own, the index is small; fed
+    unprojected into `st_morton_col` (the `st_cell_code_col` form) it
+    is copied 2^5 times, and that ~31 KB expression took 9.5 s to
+    parse first in a fresh JVM and 0.3-0.6 s per warm parse (4-vCPU
+    VM). DataFrame callers use `with_cell_code`.
     """
     lo, span, bits = _axis_sql_params(axis, precision)
     if isinstance(coord, str):
@@ -604,14 +611,44 @@ def st_cell_code_col(lat, lon, precision: int):
     the entire point side of the spatial join in whole-stage codegen —
     zero Arrow exchanges for cell assignment.
 
-    lat/lon may be Columns or SQL fragment strings; pass strings where
-    possible — the string path is one F.expr parse instead of ~150
-    py4j roundtrips (~0.5 s of driver time per call site).
+    lat/lon may be Columns or SQL fragment strings. Either way this is
+    ONE expression in which `_spread_bits32`'s five mask steps copy
+    each axis index 2^5 times: ~31 KB of SQL at precision 6. Its first
+    parse in a fresh JVM took 9.5 s, and every warm parse 0.3-0.6 s
+    (4-vCPU VM); inside a CASE it overflows Janino's 64 KB method
+    limit. DataFrame callers use `with_cell_code`, which projects the
+    axis indices first and stays small.
     """
     if isinstance(lat, str) and isinstance(lon, str):
         return F.expr(_cell_code_sql(lat, lon, precision))
     return st_morton_col(st_axis_idx_col(lon, "lon", precision),
                          st_axis_idx_col(lat, "lat", precision), precision)
+
+
+_LON_IDX_COL = "__s4n_cell_lon_idx"
+_LAT_IDX_COL = "__s4n_cell_lat_idx"
+
+
+def with_cell_code(df, lat, lon, precision: int, out_col: str):
+    """`df` plus `out_col`: the int64 geohash cell code of (lat, lon),
+    bit-identical to `st_cell_code_col` and kernels.geohash.cell_code.
+
+    Staged: the lon and lat axis indices are projected as two temporary
+    columns, `st_morton_col` spreads those plain columns, and the
+    temporaries are dropped. CollapseProject does not inline a
+    non-cheap column that is read 32 times, so the plan keeps one copy
+    of each axis expression (precision 6: a 5.0k-character optimized
+    plan against 28.9k for `st_cell_code_col`; first parse in a fresh
+    JVM 0.8 s against 9.5 s, 4-vCPU VM).
+
+    lat/lon are Columns or SQL fragment strings, as for
+    `st_axis_idx_col`.
+    """
+    return (df.withColumn(_LON_IDX_COL, st_axis_idx_col(lon, "lon", precision))
+              .withColumn(_LAT_IDX_COL, st_axis_idx_col(lat, "lat", precision))
+              .withColumn(out_col, st_morton_col(f"`{_LON_IDX_COL}`",
+                                                 f"`{_LAT_IDX_COL}`", precision))
+              .drop(_LON_IDX_COL, _LAT_IDX_COL))
 
 
 def _cover_codes_sql(minx: str, maxx: str, miny: str, maxy: str,
@@ -732,11 +769,19 @@ def st_cell_codes_for_levels_col(lat, lon, levels):
     levels the shape side actually uses (plan-time pruning) to cut the
     point-side fan-out."""
     levels = list(levels)
-    tag_bits = _gh.LEVEL_TAG_BITS
     finest = max(levels)
-    base = st_cell_code_col(lat, lon, finest)
+    return st_level_codes_col(st_cell_code_col(lat, lon, finest), finest,
+                              levels)
+
+
+def st_level_codes_col(code, precision: int, levels):
+    """Array of level-tagged ancestors, one per level in `levels`, of a
+    level-`precision` cell code column (`precision` >= every level).
+    With `with_cell_code` this builds the adaptive join's point side
+    from a projected code column."""
+    tag_bits = _gh.LEVEL_TAG_BITS
     return F.array(*[
-        F.shiftleft(F.shiftright(base, 5 * (finest - lv)), tag_bits)
+        F.shiftleft(F.shiftright(code, 5 * (precision - lv)), tag_bits)
          .bitwiseOR(F.lit(lv)).cast("long")
         for lv in levels])
 

@@ -35,10 +35,9 @@ def make_tile_index_transform(n_buckets: int, precision: int = 6):
             "doc_id", "pos", F.col("kind").alias("kind"),
             F.col("x"), F.col("y"),
             F.col("minx"), F.col("maxx"), F.col("miny"), F.col("maxy"))
-        cell = F.when(
-            F.col("kind") == 1,
-            SF.st_cell_code_col("`y`", "`x`", precision))
-        out = pts.withColumn("cell_id", cell)
+        out = (SF.with_cell_code(pts, "`y`", "`x`", precision, "cell_id")
+                 .withColumn("cell_id", F.when(F.col("kind") == 1,
+                                               F.col("cell_id"))))
         return with_bucket(out, n_buckets)
     return tile_index
 

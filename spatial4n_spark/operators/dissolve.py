@@ -185,10 +185,10 @@ def dissolve_two_level(df: DataFrame, keys: list, shape_col: str = "shape",
     `dissolve` (bounded by the per-key-gather contract)."""
     from .. import functions as SF
 
-    cell = SF.st_cell_code_col(f"`{shape_col}`.`miny`",
-                               f"`{shape_col}`.`minx`", precision)
-    stage1 = dissolve(df.withColumn("__cell", cell), keys + ["__cell"],
-                      shape_col, allow_approx=False)
+    celled = SF.with_cell_code(df, f"`{shape_col}`.`miny`",
+                               f"`{shape_col}`.`minx`", precision, "__cell")
+    stage1 = dissolve(celled, keys + ["__cell"], shape_col,
+                      allow_approx=False)
     bad1 = stage1.where(F.col("error").isNotNull())
     ok1 = stage1.where(F.col("error").isNull())
     stage2 = dissolve(ok1.select(*keys, shape_col), keys, shape_col,

@@ -29,15 +29,15 @@ def with_point_cell(points: DataFrame, x: str = "x", y: str = "y",
     """Assign each point its (single) cell.
 
     codes=True (default) uses the int64 interleaved-bit cell code
-    computed as a PURE Column expression (Morton bit-spread, whole-stage
-    codegen, zero Arrow exchange) — the join fast path. codes=False
+    computed in pure Column expressions (Morton bit-spread, whole-stage
+    codegen, zero Arrow exchange), staged by `functions.with_cell_code`:
+    the single-expression `st_cell_code_col` form took 9.5 s to parse
+    first in a fresh JVM and 0.3-0.6 s per warm parse. codes=False
     produces the reference-compatible geohash string via the kernel.
     """
     if codes:
-        # string fragments: single-F.expr construction (the Column form
-        # costs ~150 py4j roundtrips of driver time per call site)
-        return points.withColumn(
-            cell_col, SF.st_cell_code_col(f"`{y}`", f"`{x}`", precision))
+        return SF.with_cell_code(points, f"`{y}`", f"`{x}`", precision,
+                                 cell_col)
     return points.withColumn(cell_col, SF.st_cell(F.col(y), F.col(x), precision))
 
 
@@ -338,10 +338,13 @@ def point_in_shape_join_adaptive(points: DataFrame, shapes: DataFrame,
             .distinct().collect())
         if not levels:
             levels = [min_level]
-    pts = (points.withColumn("__mlcells", SF.st_cell_codes_for_levels_col(
-               f"`{point_y}`", f"`{point_x}`", levels))
-                 .withColumn("cell_id", F.explode_outer("__mlcells"))
-                 .drop("__mlcells"))
+    finest = max(levels)
+    pts = (SF.with_cell_code(points, f"`{point_y}`", f"`{point_x}`", finest,
+                             "__mlcode")
+             .withColumn("__mlcells", SF.st_level_codes_col(
+                 F.col("__mlcode"), finest, levels))
+             .withColumn("cell_id", F.explode_outer("__mlcells"))
+             .drop("__mlcode", "__mlcells"))
     if broadcast_shapes:
         cover = F.broadcast(cover)
         join_cond = pts["cell_id"] == cover["cover_cell"]

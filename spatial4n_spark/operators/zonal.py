@@ -99,8 +99,8 @@ def zonal_stats(pixels: DataFrame, zones: DataFrame,
     a double mean is oracle-unstable across engines).
     """
     from .. import functions as SF
-    px = pixels.withColumn(
-        "__cell", SF.st_cell_code_col("`px_lat`", "`px_lon`", precision))
+    px = SF.with_cell_code(pixels, "`px_lat`", "`px_lon`", precision,
+                           "__cell")
     zc = (zones
           .withColumn("__cells", SF.st_cover_codes(
               F.col("minx"), F.col("maxx"), F.col("miny"), F.col("maxy"), precision))

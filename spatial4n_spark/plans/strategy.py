@@ -98,9 +98,8 @@ def estimate_hot_cell_ratio(points, x: str = "x", y: str = "y",
     from .. import functions as SF
 
     s = points.sample(fraction=sample_fraction, seed=seed)
-    counts = (s.select(SF.st_cell_code_col(f"`{y}`", f"`{x}`", precision)
-                       .alias("c"))
-               .groupBy("c").count())
+    counts = (SF.with_cell_code(s, f"`{y}`", f"`{x}`", precision, "c")
+                .groupBy("c").count())
     row = counts.agg(F.max("count").alias("mx"),
                      F.sum("count").alias("tot")).collect()[0]
     if not row.tot:

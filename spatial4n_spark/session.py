@@ -66,6 +66,23 @@ def clear_cached_state(spark: SparkSession) -> int:
     return n
 
 
+def _default_driver_mem(meminfo: str = "/proc/meminfo") -> str:
+    """Driver heap when SPARK_GRAFT_DRIVER_MEM is unset: half of the
+    machine's MemTotal, capped at 24g (24g when MemTotal is unknown).
+    A fixed 24g on a 15 GB machine let the JVM grow until the kernel's
+    OOM killer ended it."""
+    cap_mb = 24 * 1024
+    try:
+        with open(meminfo) as fh:
+            for line in fh:
+                if line.startswith("MemTotal:"):
+                    total_mb = int(line.split()[1]) // 1024
+                    return f"{max(512, min(cap_mb, total_mb // 2))}m"
+    except (OSError, ValueError, IndexError):
+        pass
+    return "24g"
+
+
 def get_spark(app: str = "spatial4n_spark", cpus: int | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
     if cpus is None:
@@ -99,8 +116,18 @@ def get_spark(app: str = "spatial4n_spark", cpus: int | None = None,
         # the tail ≤ 1/4 wave; on big tables maxPartitionBytes rules.
         .config("spark.sql.files.minPartitionNum", str(4 * cpus))
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+                                         or _default_driver_mem())
         .config("spark.ui.enabled", "false")
+        # A killed task's Python monitor threads destroy EVERY worker the
+        # task used once the task outlives this timeout, including workers
+        # it already released to the reuse pool and another task now
+        # holds; that task then dies with CancelledKeyException. With the
+        # 2 s default, one failed query (a raise_error guard cancelling
+        # its stage while sibling tasks finish a UDF batch) broke the next
+        # query's Arrow stage. 120 s lets a cancelled task finish its
+        # batch; a truly hung worker is still killed after it.
+        .config("spark.python.task.killTimeout", "120s")
     )
     spark = builder.getOrCreate()
     spark.sparkContext.addPyFile(package_zip())

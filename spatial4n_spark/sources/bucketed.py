@@ -61,6 +61,6 @@ def prepare_points_bucketed(spark: SparkSession, points: DataFrame,
     """Assign cell codes (pure-JVM Morton expression) and write the
     point table bucketed by cell — the write-once side of the amortized
     join."""
-    pts = points.withColumn(
-        "cell_id", SF.st_cell_code_col(f"`{y}`", f"`{x}`", precision))
+    pts = SF.with_cell_code(points, f"`{y}`", f"`{x}`", precision,
+                            "cell_id")
     write_bucketed_by_cell(pts, table, n_buckets)

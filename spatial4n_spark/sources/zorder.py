@@ -41,8 +41,8 @@ def write_zordered(points: DataFrame, path: str, precision: int = 6,
     partition — one shuffle at write time buys min/max-prunable scans
     for every later bbox query. Parquet footer stats do the rest.
     """
-    coded = points.withColumn(
-        CELL_COL, SF.st_cell_code_col(f"`{y}`", f"`{x}`", precision))
+    coded = SF.with_cell_code(points, f"`{y}`", f"`{x}`", precision,
+                              CELL_COL)
     (coded.repartitionByRange(n_files, F.col(CELL_COL))
           .sortWithinPartitions(CELL_COL)
           .write.mode("overwrite").parquet(path))

@@ -9,11 +9,12 @@ from spatial4n_spark import functions as SF
 from spatial4n_spark.kernels.geohash import cell_code
 
 
-@pytest.mark.parametrize("mode", ["column", "sqlstr"])
+@pytest.mark.parametrize("mode", ["column", "sqlstr", "staged"])
 @pytest.mark.parametrize("precision", [1, 2, 4, 5, 6, 7, 9, 12])
 def test_cell_code_col_bit_identical(spark, precision, mode):
-    """Both construction modes — Column-API tree and the single-parse
-    SQL-string fast path — must be bit-identical to the kernel."""
+    """Every construction mode — Column-API tree, single-parse SQL
+    string and the staged DataFrame builder `with_cell_code` — must be
+    bit-identical to the kernel."""
     rng = np.random.default_rng(42)
     lon = np.concatenate([rng.uniform(-180, 180, 5000),
                           [-180.0, 180.0, 0.0, 11.25, -11.25, 90.0, -90.0,
@@ -22,11 +23,14 @@ def test_cell_code_col_bit_identical(spark, precision, mode):
                           [-90.0, 90.0, 0.0, 45.0, -45.0, 22.5, -22.5,
                            89.999999, -89.999999]])
     df = spark.createDataFrame(pd.DataFrame({"lon": lon, "lat": lat}))
-    args = (("`lat`", "`lon`") if mode == "sqlstr"
-            else (F.col("lat"), F.col("lon")))
-    got = np.array(
-        df.select(SF.st_cell_code_col(*args, precision).alias("c"))
-          .toPandas()["c"], dtype=np.int64)
+    if mode == "staged":
+        out = SF.with_cell_code(df, "`lat`", "`lon`", precision, "c")
+        assert out.columns == ["lon", "lat", "c"]
+    else:
+        args = (("`lat`", "`lon`") if mode == "sqlstr"
+                else (F.col("lat"), F.col("lon")))
+        out = df.select(SF.st_cell_code_col(*args, precision).alias("c"))
+    got = np.array(out.toPandas()["c"], dtype=np.int64)
     want = cell_code(lat, lon, precision)
     assert np.array_equal(got, want)
 
@@ -67,6 +71,17 @@ def test_cover_codes_sqlstr_lambda_shadowing(spark):
     assert list(a[0]) == list(b[0])
 
 
+def test_with_point_cell_plan_stays_small(spark):
+    """The staged point cell code keeps one copy of each axis-index
+    expression in the optimized plan; the single-expression form copies
+    it 2^5 times (28.9k characters at precision 6)."""
+    from spatial4n_spark.operators.joins import with_point_cell
+    df = spark.range(100).selectExpr("cast(id as double) / 7 as x",
+                                     "cast(id as double) / 11 as y")
+    out = with_point_cell(df, "x", "y", 6)
+    assert len(out._jdf.queryExecution().optimizedPlan().toString()) < 8000
+
+
 def test_cell_code_col_no_python_in_plan(spark):
     df = spark.range(10).selectExpr("cast(id as double) as x",
                                     "cast(id as double) as y")
@@ -100,8 +115,10 @@ def test_rect_fast_path_equals_kernel_refine(spark):
     assert len(fast) > 0
 
 
-@pytest.mark.parametrize("precision", [2, 5, 6, 12])
-def test_cell_code_exact_at_boundaries(spark, precision):
+@pytest.mark.parametrize("precision,build", [
+    pytest.param(p, b, id=str(p) if b == "column" else f"{p}-{b}")
+    for b in ("column", "staged") for p in (2, 5, 6, 12)])
+def test_cell_code_exact_at_boundaries(spark, precision, build):
     """Adversarial boundary battery: exact grid boundaries and +-3e-14 /
     +-1ulp neighbors must match the kernel bisection exactly (the
     closed form alone loses sub-ulp excesses — real data hit this at
@@ -117,10 +134,13 @@ def test_cell_code_exact_at_boundaries(spark, precision):
                    + [1e-300, -1e-300, 112.50000000000003])
     lat = np.clip(lon / 2.0, -90, 90)
     df = spark.createDataFrame(pd.DataFrame({"lon": lon, "lat": lat}))
-    got = np.array(
-        df.select(SF.st_cell_code_col(F.col("lat"), F.col("lon"),
-                                      precision).alias("c"))
-          .toPandas()["c"], dtype=np.int64)
+    if build == "staged":
+        out = SF.with_cell_code(df, F.col("lat"), F.col("lon"), precision,
+                                "c")
+    else:
+        out = df.select(SF.st_cell_code_col(F.col("lat"), F.col("lon"),
+                                            precision).alias("c"))
+    got = np.array(out.toPandas()["c"], dtype=np.int64)
     assert np.array_equal(got, cell_code(lat, lon, precision))
 
 

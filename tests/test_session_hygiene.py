@@ -39,3 +39,16 @@ def test_clear_cached_state_idempotent(spark):
 
     clear_cached_state(spark)
     assert clear_cached_state(spark) == 0
+
+
+def test_default_driver_mem_follows_machine_memory(tmp_path):
+    """Unset SPARK_GRAFT_DRIVER_MEM: half of MemTotal, capped at 24g."""
+    from spatial4n_spark.session import _default_driver_mem
+
+    small = tmp_path / "small"
+    small.write_text("MemTotal:       15728640 kB\nMemFree: 1 kB\n")
+    assert _default_driver_mem(str(small)) == "7680m"
+    big = tmp_path / "big"
+    big.write_text("MemTotal:       263000000 kB\n")
+    assert _default_driver_mem(str(big)) == "24576m"
+    assert _default_driver_mem(str(tmp_path / "missing")) == "24g"

@@ -48,6 +48,32 @@ def test_job_output_matches_direct_run(spark, docs_path, tmp_path):
     assert summary2["buckets_skipped"] == N_BUCKETS
 
 
+def test_tile_index_point_cells_compile_without_fallback(spark):
+    """The tile-index projection must compile in whole-stage codegen:
+    with fallback off, a generated method past Janino's 64 KB limit
+    fails the query instead of silently running interpreted."""
+    import numpy as np
+
+    from spatial4n_spark.kernels.geohash import cell_code
+    from spatial4n_spark.sources.docs import generate_docs
+
+    key = "spark.sql.codegen.fallback"
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, "false")
+    try:
+        rows = (make_tile_index_transform(8, 6)(generate_docs(spark, 5000, 4))
+                .where(F.col("kind") == 1)
+                .select("x", "y", "cell_id").toPandas())
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
+    assert len(rows) > 0
+    want = cell_code(rows["y"].to_numpy(), rows["x"].to_numpy(), 6)
+    assert np.array_equal(rows["cell_id"].to_numpy(dtype=np.int64), want)
+
+
 def test_spark_submit_cli_end_to_end(tmp_path):
     """The real deployment path: spark-submit --py-files <pkg.zip>."""
     from spatial4n_spark.session import package_zip
